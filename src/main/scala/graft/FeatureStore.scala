@@ -24,7 +24,9 @@ final class FeatureStore(spark: SparkSession, views: Map[String, FeatureView]) {
     * @param saltBuckets with > 1 plus `autoDetectHotKeys`, entity keys whose
     *   sampled share exceeds ~1% are salted across this many sub-buckets in
     *   the as-of window (hot-key mitigation; correctness unchanged — see
-    *   AsOfJoin.windowed). Detection is one O(sample) aggregate per view.
+    *   AsOfJoin.windowed). Detection samples the entity frame once per call
+    *   for each distinct join-key set: one O(sample) job, however many
+    *   views share those keys.
     */
   def getHistoricalFeatures(
       entityDf: DataFrame,
@@ -44,33 +46,28 @@ final class FeatureStore(spark: SparkSession, views: Map[String, FeatureView]) {
     val entityNorm = entityDf.withColumn(tsCol, graft.fe.Timestamps.normalizeUtc(
       col(tsCol), entityDf.schema(tsCol).dataType))
     val grouped = FeatureRefs.group(FeatureRefs.parse(featureRefs), views, fullFeatureNames)
+    for ((view, _) <- grouped; k <- view.joinKeys)
+      require(entityDf.columns.contains(k),
+        s"entity frame is missing join key '$k' for view '${view.name}'")
     val bounds = Materialize.timestampBounds(entityNorm, tsCol)
+    val hotByKeys: Map[Seq[String], Seq[Any]] =
+      if (saltBuckets > 1 && autoDetectHotKeys)
+        grouped.keys.map(_.joinKeys).toSeq.distinct
+          .map(k => k -> graft.exec.Skew.detectHotKeyTuples(entityDf, k)).toMap
+      else Map.empty
 
-    // Split the fold: narrow scalar views fold directly onto the entity
-    // frame (their payload is cheap to carry through later windows); wide
-    // (array/binary/map/struct) views run ENTITY-SIDE LATE MATERIALIZED —
-    // each joins a distinct narrow (join keys, ts) probe keyed by a hash
-    // row-id, and the wide results stitch back by rowId equi-joins at the
-    // very end. Consequences at scale: NO wide column — neither an entity
-    // payload nor an earlier wide view's features — ever enters any window
-    // exchange/sort, for any number of wide views (round 2's fold put wide
-    // views last, but a second wide view still pushed the first one's
-    // payload through its window). The as-of result depends only on
-    // (join keys, ts), so stitching on hash(keys, ts) is exact up to 64-bit
-    // collisions between DISTINCT key-ts tuples (~n²/2⁶⁵ — the standard
-    // documented trade); legal duplicate entity rows share a rowId and each
-    // receives the single matched wide row, preserving multiplicity.
-    def isWide(view: FeatureView, feats: Seq[String]): Boolean =
-      view.features.exists(f =>
-        feats.contains(f.name) && (f.valueType match {
-          case _: ValueType.ListOf | _: ValueType.MapOf => true
-          case ValueType.BYTES => true
+    case class Planned(view: String, feature: DataFrame, spec: AsOfSpec, salt: Int, hot: Seq[Any]) {
+      val wide: Boolean = feature.schema.fields.exists(f =>
+        spec.features.contains(f.name) && (f.dataType match {
+          case _: ArrayType | _: BinaryType | _: MapType | _: StructType => true
           case _ => false
         }))
-    def joinOne(acc: DataFrame, view: FeatureView, feats: Seq[String]): DataFrame = {
+      def named(df: DataFrame): DataFrame = spec.features.foldLeft(df) { (d, f) =>
+        d.withColumnRenamed(f, FeatureRefs.outputName(view, f, fullFeatureNames))
+      }
+    }
+    val planned = grouped.toSeq.sortBy(_._1.name).map { case (view, feats) =>
       val keys = view.joinKeys
-      keys.foreach(k => require(acc.columns.contains(k),
-        s"entity frame is missing join key '$k' for view '${view.name}'"))
       val raw = spark.read.parquet(view.source.path)
       val mapped = FieldMapping(raw, view.source.fieldMapping)
       val pruned = prunePartitions(
@@ -80,47 +77,45 @@ final class FeatureStore(spark: SparkSession, views: Map[String, FeatureView]) {
       val projected = pruned.select(
         (keys ++ Seq(view.source.eventTimestampColumn) ++
           view.source.createdTimestampColumn.toSeq ++ feats).distinct.map(col): _*)
-      val spec = AsOfSpec(
-        keys = keys,
-        leftTs = tsCol,
-        rightTs = view.source.eventTimestampColumn,
-        createdTs = view.source.createdTimestampColumn,
-        ttlSeconds = view.ttlSeconds,
-        features = feats)
-      val hot: Seq[Any] =
-        if (saltBuckets > 1 && autoDetectHotKeys)
-          graft.exec.Skew.detectHotKeyTuples(entityDf, keys)
-        else Nil
-      val joined = joinView(acc, projected, spec, feats,
-        if (hot.nonEmpty || (saltBuckets > 1 && !autoDetectHotKeys)) saltBuckets else 1,
-        hot)
-      feats.foldLeft(joined) { (d, f) =>
-        d.withColumnRenamed(f, FeatureRefs.outputName(view.name, f, fullFeatureNames))
-      }
+      val spec = AsOfSpec(keys, tsCol, view.source.eventTimestampColumn,
+        view.source.createdTimestampColumn, view.ttlSeconds, feats)
+      val hot = hotByKeys.getOrElse(keys, Nil)
+      val salt = if (hot.nonEmpty || (saltBuckets > 1 && !autoDetectHotKeys)) saltBuckets else 1
+      Planned(view.name, projected, spec, salt, hot)
     }
 
-    val (wideSeq, narrowSeq) =
-      grouped.toSeq.sortBy(_._1.name).partition { case (v, f) => isWide(v, f) }
-    val narrowAcc = narrowSeq.foldLeft(entityNorm) { case (acc, (view, feats)) =>
-      joinOne(acc, view, feats)
+    // Split the fold: narrow scalar views fold directly onto the entity
+    // frame (their payload is cheap to carry through later windows); wide
+    // (array/binary/map/struct) views run ENTITY-SIDE LATE MATERIALIZED —
+    // each matches the distinct (join keys, ts) probes, keyed by a hash
+    // probe id, fetches its payload once (AsOfJoin.matchAndFetch), and the
+    // wide results stitch back by probe-id equi-joins at the very end. So NO
+    // wide column ever enters any window exchange/sort, for any number of
+    // wide views. The as-of result depends only on (join keys, ts), so the
+    // stitch is exact up to 64-bit collisions between distinct tuples
+    // (~n²/2⁶⁵); duplicate entity rows share a probe id and each receives
+    // the single matched wide row, preserving multiplicity.
+    val (wideSeq, narrowSeq) = planned.partition(_.wide)
+    val narrowAcc = narrowSeq.foldLeft(entityNorm) { (acc, p) =>
+      p.named(AsOfJoin.windowed(acc, p.feature, p.spec, p.salt, p.hot))
     }
     if (wideSeq.isEmpty) narrowAcc
     else {
-      val rid = "__graft_ent_rowid"
+      val (rid, rowId) = ("__graft_ent_rowid", "__graft_rowid")
       // union of all wide views' join keys + the entity ts: the full
       // determinant of every wide as-of result
-      val keyCols = (wideSeq.flatMap(_._1.joinKeys).distinct :+ tsCol).distinct
-      val probeBase = entityNorm.select(keyCols.map(col): _*)
-        .withColumn(rid, xxhash64(keyCols.map(col): _*))
-        .dropDuplicates(rid)
-      val wideJoined = wideSeq.map { case (view, feats) =>
-        val probe = probeBase.select(
-          ((view.joinKeys :+ tsCol).distinct :+ rid).map(col): _*)
-        val outNames = feats.map(f =>
-          FeatureRefs.outputName(view.name, f, fullFeatureNames))
-        joinOne(probe, view, feats).select((rid +: outNames).map(col): _*)
+      val keyCols = (wideSeq.flatMap(_.spec.keys).distinct :+ tsCol).distinct
+      // null flags are hashed too: xxhash64 skips null inputs, so (x, null)
+      // and (null, x) would otherwise share one probe id
+      val probeId = xxhash64(keyCols.map(col) ++ keyCols.map(col(_).isNull): _*)
+      val probeBase = entityNorm.select(keyCols.map(col): _*).distinct()
+        .withColumn(rid, probeId)
+      val wideJoined = wideSeq.map { p =>
+        val probe = probeBase.select(((p.spec.keys :+ tsCol).distinct :+ rid).map(col): _*)
+        p.named(AsOfJoin.matchAndFetch(probe, Seq(rid), withRowId(p.feature, rowId), p.spec,
+          rowId, p.salt, p.hot, broadcastFetch = true).select((rid +: p.spec.features).map(col): _*))
       }
-      val accWithId = narrowAcc.withColumn(rid, xxhash64(keyCols.map(col): _*))
+      val accWithId = narrowAcc.withColumn(rid, probeId)
       wideJoined.foldLeft(accWithId)((a, w) => a.join(w, Seq(rid), "left")).drop(rid)
     }
   }
@@ -148,54 +143,24 @@ final class FeatureStore(spark: SparkSession, views: Map[String, FeatureView]) {
     Materialize.lookupMulti(keys, online, asOf)
   }
 
-  /** Route per payload width: narrow scalar features ride the single-shuffle
-    * windowed as-of join directly; views with array/binary/map/struct
-    * features go through [[AsOfJoin.windowedLate]] so wide payloads never
-    * pass through the window's exchange+sort (the round-1 facade pushed
-    * token arrays through the window — exactly the pattern windowedLate was
-    * built to avoid). The fetch row id is a deterministic hash of the full
-    * projected row: stable across the plan's two computations of the
-    * feature frame, unique up to 64-bit collisions (~n²/2⁶⁵ — a collision
-    * could duplicate one entity row with an identical-hash payload; at that
-    * probability this is the standard engineering trade). Rows that are
-    * IDENTICAL after projection hash equal by construction, so the frame is
-    * deduplicated on the row id before the join — collapsing them is
-    * semantics-preserving (the as-of pick among identical rows is identical)
-    * and keeps the final fetch join at exactly one row per entity row.
-    * Map-typed columns are serialized with `to_json` before hashing (Spark
-    * rejects hash expressions over maps because map equality is
-    * order-insensitive; `to_json` of our projected rows is deterministic for
-    * a given row value, which is all row-identity needs).
+  /** Fetch row id for a wide view: a deterministic hash of the full
+    * projected row, stable across matchAndFetch's two reads of the feature
+    * frame and unique up to 64-bit collisions (~n²/2⁶⁵, the standard
+    * trade). Rows identical after projection share it, and matchAndFetch
+    * collapses their fetched copies. Map-typed columns hash via `to_json`
+    * (Spark rejects hash expressions over maps; `to_json` of a projected
+    * row is deterministic, which is all row identity needs).
     */
-  private def joinView(
-      acc: DataFrame,
-      projected: DataFrame,
-      spec: AsOfSpec,
-      feats: Seq[String],
-      saltBuckets: Int = 1,
-      hotKeys: Seq[Any] = Nil): DataFrame = {
-    val wide = projected.schema.fields.exists(f =>
-      feats.contains(f.name) && (f.dataType match {
-        case _: ArrayType | _: BinaryType | _: MapType | _: StructType => true
-        case _ => false
-      }))
-    if (!wide) AsOfJoin.windowed(acc, projected, spec, saltBuckets, hotKeys)
-    else {
-      def containsMap(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-        case _: MapType => true
-        case ArrayType(et, _) => containsMap(et)
-        case st: StructType => st.fields.exists(f => containsMap(f.dataType))
-        case _ => false
-      }
-      val rowId = "__graft_rowid"
-      val hashInputs = projected.schema.fields.toSeq.map(f =>
-        if (containsMap(f.dataType)) to_json(col(f.name)) else col(f.name))
-      val withId = projected
-        .withColumn(rowId, xxhash64(hashInputs: _*))
-        .dropDuplicates(rowId)
-      AsOfJoin.windowedLate(acc, withId, spec, rowId = rowId,
-        saltBuckets = saltBuckets, hotKeys = hotKeys).drop(rowId)
+  private def withRowId(projected: DataFrame, rowId: String): DataFrame = {
+    def containsMap(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
+      case _: MapType => true
+      case ArrayType(et, _) => containsMap(et)
+      case st: StructType => st.fields.exists(f => containsMap(f.dataType))
+      case _ => false
     }
+    val hashInputs = projected.schema.fields.toSeq.map(f =>
+      if (containsMap(f.dataType)) to_json(col(f.name)) else col(f.name))
+    projected.withColumn(rowId, xxhash64(hashInputs: _*))
   }
 
   /** `date_partition_column` read-side pruning (reference:

@@ -451,9 +451,9 @@ object SparkEntry {
 
   /** Facade retrieval of an ARRAY feature (token payload): the q18 scenario
     * driven through the public FeatureStore API — the store detects the wide
-    * payload and routes through windowedLate (narrow window + broadcast-semi
-    * late fetch; see FeatureStore.joinView), so this gate row also proves
-    * the wide-payload routing end-to-end. Same oracle as q18.
+    * payload and routes it through the late fetch (narrow window, then a
+    * one-pass payload fetch; see AsOfJoin.matchAndFetch), so this gate row
+    * also proves the wide-payload routing end-to-end. Same oracle as q18.
     */
   private def q41FeatureStoreTokens(spark: SparkSession, dir: String): DataFrame = {
     val out = scratchDir("graft_q41_src").toString

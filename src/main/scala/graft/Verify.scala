@@ -2,7 +2,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Queries that
+  * throw are listed in failed.json next to it, and the run exits 1. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -15,13 +16,13 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    val failed = SparkEntry.queries.toSeq.sortBy(_._1).filterNot { case (name, fn) =>
+      try { fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"); true }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        false
       }
-    }
+    }.map(_._1)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -37,6 +38,11 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/failed.json"), failed.map(q).mkString("[", ",", "]"))
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

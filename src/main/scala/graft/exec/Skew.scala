@@ -1,11 +1,13 @@
 package graft.exec
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Sampled hot-key detection (SURVEY §4): find entity keys whose share of
   * the data exceeds `hotShare`, from a seeded sample — the planning input
-  * for [[graft.pit.AsOfJoin]]'s selective salting. One aggregate over the
+  * for [[graft.pit.AsOfJoin]]'s selective salting. One job counts the
   * sampled fraction; cost is O(sample), independent of table size, so it is
   * cheap enough to run inline before every large as-of join.
   *
@@ -39,17 +41,19 @@ object Skew {
       hotShare: Double = 0.01,
       sampleFraction: Double = 0.01,
       seed: Long = 42L): Seq[Seq[Any]] = {
+    // One job: the sampled tuple counts come back to the driver (at most
+    // the sample's distinct keys), which sums them and picks the hot ones,
+    // hottest first. Binary key values count by content, not identity.
     val counts = df.select(keyCols.map(col): _*)
       .sample(withReplacement = false, sampleFraction, seed)
-      .groupBy(keyCols.map(col): _*).count()
-      .cache()
-    try {
-      // sum over zero rows is NULL — read null-safely before the guard
-      val row = counts.agg(sum(col("count"))).head()
-      val total = if (row.isNullAt(0)) 0L else row.getLong(0)
-      if (total == 0) Seq.empty
-      else counts.where(col("count") >= lit(total * hotShare))
-        .collect().map(r => keyCols.indices.map(r.get).toSeq).toSeq
-    } finally counts.unpersist()
+      .rdd.map(_.toSeq.map {
+        case b: Array[Byte] => ArraySeq.unsafeWrapArray(b)
+        case v => v
+      }).countByValue()
+    val total = counts.values.sum
+    counts.toSeq.filter(_._2 >= total * hotShare).sortBy(-_._2).map(_._1.map {
+      case b: ArraySeq.ofByte => b.unsafeArray
+      case v => v
+    })
   }
 }

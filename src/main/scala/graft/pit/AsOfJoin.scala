@@ -219,9 +219,10 @@ object AsOfJoin {
   }
 
   /** Late-materialized windowed as-of join: the shuffle/sort runs on a
-    * NARROW projection (keys, ts, created, rowId); wide feature columns are
-    * fetched afterwards by an equi-join on `rowId` against the original
-    * feature frame, pruned by a broadcast semi-join of the matched ids.
+    * NARROW projection (keys, ts, created, rowId) over the distinct
+    * (keys, ts) probes of `entity`; wide feature columns are fetched once
+    * afterwards ([[matchAndFetch]]) and stitched back onto every entity row
+    * by a left join on (keys, ts), so duplicate rows keep their multiplicity.
     *
     * Shuffle and sort volume stay O(narrow bytes) regardless of payload
     * width — at 100 TB with ~KB token arrays per row this is the difference
@@ -229,11 +230,12 @@ object AsOfJoin {
     * every exchange and sort (measured locally: the wide-through-the-window
     * plan is I/O-bound and stops scaling with cores; this one scales).
     *
-    * `rowId` must uniquely identify feature rows (a stable table key, e.g.
-    * a sequence id — never a nondeterministically generated id). When the
-    * matched-id set is too large to broadcast, pass
-    * `broadcastFetch = false`: the fetch becomes a shuffle equi-join —
-    * still far cheaper than sorting wide rows inside the window.
+    * Rows sharing a `rowId` must be identical in `spec.features` (a stable
+    * table key or a row hash — never a nondeterministically generated id);
+    * the output carries the picked `rowId`. When the (probe, rowId) pairs
+    * are too large to broadcast, pass `broadcastFetch = false`: the fetch
+    * becomes a shuffle equi-join — still far cheaper than sorting wide rows
+    * inside the window.
     */
   def windowedLate(
       entity: DataFrame,
@@ -243,23 +245,39 @@ object AsOfJoin {
       saltBuckets: Int = 1,
       hotKeys: Seq[Any] = Nil,
       broadcastFetch: Boolean = true): DataFrame = {
+    val probeKey = (spec.keys :+ spec.leftTs).distinct
+    val probes = entity.select(probeKey.map(col): _*).distinct()
+    val fetched = matchAndFetch(probes, probeKey, feature, spec, rowId,
+      saltBuckets, hotKeys, broadcastFetch)
+    entity.join(fetched, probeKey, "left")
+      .select(((rowId +: entity.columns.toSeq) ++ spec.features).map(c => col(s"`$c`")): _*)
+  }
+
+  /** Match once, fetch once: the narrow window picks one `rowId` per probe
+    * (`probes` is unique on `probeKey`), the wide payload streams once past
+    * the broadcast (probe, rowId) pairs, and copies of identical rows
+    * collapse over the fetched rows (at most one per probe), never over the
+    * whole payload. Returns `probeKey ++ rowId ++ spec.features` for the
+    * matched probes, to be stitched back by a left join on `probeKey`.
+    */
+  private[graft] def matchAndFetch(
+      probes: DataFrame,
+      probeKey: Seq[String],
+      feature: DataFrame,
+      spec: AsOfSpec,
+      rowId: String,
+      saltBuckets: Int,
+      hotKeys: Seq[Any],
+      broadcastFetch: Boolean): DataFrame = {
     val narrowFeature = feature.select(
       (spec.keys ++ Seq(spec.rightTs) ++ spec.createdTs.toSeq :+ rowId)
         .distinct.map(col): _*)
-    val matched = windowed(entity, narrowFeature, spec.copy(features = Seq(rowId)),
+    val pairs = windowed(probes, narrowFeature, spec.copy(features = Seq(rowId)),
       saltBuckets, hotKeys)
+      .select((probeKey :+ rowId).map(col): _*)
     val payload = feature.select((rowId +: spec.features).distinct.map(col): _*)
-    val pruned =
-      if (broadcastFetch)
-        payload.join(
-          broadcast(matched.select(col(rowId)).na.drop().distinct()),
-          Seq(rowId), "left_semi")
-      else payload
-    // shuffle-HASH fetch, not sort-merge: the wide payload crosses exactly
-    // one exchange (to its rowId partition) and is never sorted — a
-    // sort-merge fetch would re-sort every payload byte just to equi-join
-    // on an 8-byte key
-    matched.join(pruned.hint("shuffle_hash"), Seq(rowId), "left")
+    payload.join(if (broadcastFetch) broadcast(pairs) else pairs, Seq(rowId))
+      .dropDuplicates(probeKey)
   }
 
   /** Range-join strategy (reference SQL shape, bigquery.py:551-694 compressed

@@ -108,11 +108,15 @@ class FeatureStoreSpec extends SparkSpec {
     assert(out(101L) == List(9))
     assert(out(102L) == Nil) // no history for driver 3 → null feature
 
-    // the physical plan must show the late-fetch shape: a broadcast
-    // semi-prune + equi-join fetch, not the array riding the window sort
-    val plan = store.getHistoricalFeatures(entity, Seq("seqs:toks"))
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("LeftSemi"), "expected broadcast-semi late fetch in plan")
+    // the physical plan must show the one-pass late-fetch shape: the view's
+    // match runs exactly once (one window), and the array never rides the
+    // window or any sort/exchange feeding it
+    for (salt <- Seq(1, 4)) {
+      val (windows, wide) = PlanShape.windowsAndWideBelow(
+        store.getHistoricalFeatures(entity, Seq("seqs:toks"), saltBuckets = salt))
+      assert(windows == 1, s"salt=$salt: $windows windows for one view")
+      assert(wide.isEmpty, s"salt=$salt: array-typed output below a window: $wide")
+    }
 
     // wide routing composes with salting: identical results
     val salted = store.getHistoricalFeatures(entity, Seq("seqs:toks", "seqs:rate"),

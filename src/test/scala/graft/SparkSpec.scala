@@ -24,6 +24,25 @@ object SparkSpec {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
 
+  /** Runs `f` and counts the Spark jobs it started (a SparkListener over
+    * the drained listener bus).
+    */
+  def jobsDuring[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    org.apache.spark.GraftTestShim.drainListenerBus(sc)
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = f
+      org.apache.spark.GraftTestShim.drainListenerBus(sc)
+      (out, started.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   def tsOf(s: String): java.sql.Timestamp =
     java.sql.Timestamp.from(java.time.Instant.parse(s))
 
